@@ -150,10 +150,73 @@ object S2 {
 
   def coverRect(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
                 lvl: Int): Array[Long] = {
+    val b = faceLeafBounds(minLat, minLon, maxLat, maxLon)
     val cellShift = MaxLevel - lvl
     val maxIj = (1 << lvl) - 1
     val set = new scala.collection.mutable.HashSet[Long]
+    var f = 0
+    while (f < 6) {
+      if (b(4 * f) >= 0) {
+        val i0 = ijLo(b(4 * f), cellShift); val i1 = ijHi(b(4 * f + 1), cellShift, maxIj)
+        val j0 = ijLo(b(4 * f + 2), cellShift); val j1 = ijHi(b(4 * f + 3), cellShift, maxIj)
+        var i = i0
+        while (i <= i1) {
+          var j = j0
+          while (j <= j1) {
+            set += parent(fromFaceIj(f, i << cellShift, j << cellShift), lvl)
+            j += 1
+          }
+          i += 1
+        }
+      }
+      f += 1
+    }
+    set.toArray
+  }
 
+  /** `coverRect(...).length` without building the covering: distinct
+   *  (face, i, j) are distinct cells, so the covering's size is the sum of
+   *  its per-face ij rectangles. */
+  def coverCount(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
+                 lvl: Int): Long =
+    countAt(faceLeafBounds(minLat, minLon, maxLat, maxLon), lvl)
+
+  /** [[coverCount]] at every level `0..maxLevel`, from one bound computation. */
+  def coverCounts(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
+                  maxLevel: Int): Array[Long] = {
+    val b = faceLeafBounds(minLat, minLon, maxLat, maxLon)
+    Array.tabulate(maxLevel + 1)(countAt(b, _))
+  }
+
+  private def countAt(b: Array[Int], lvl: Int): Long = {
+    val cellShift = MaxLevel - lvl
+    val maxIj = (1 << lvl) - 1
+    var n = 0L
+    var f = 0
+    while (f < 6) {
+      if (b(4 * f) >= 0) {
+        val ni = ijHi(b(4 * f + 1), cellShift, maxIj) - ijLo(b(4 * f), cellShift) + 1
+        val nj = ijHi(b(4 * f + 3), cellShift, maxIj) - ijLo(b(4 * f + 2), cellShift) + 1
+        n += ni.toLong * nj
+      }
+      f += 1
+    }
+    n
+  }
+
+  // a level's ij range from a leaf bound, padded by one cell of float-safety
+  // margin and clamped to the face
+  private def ijLo(leaf: Int, cellShift: Int): Int = math.max(0, (leaf >> cellShift) - 1)
+  private def ijHi(leaf: Int, cellShift: Int, maxIj: Int): Int =
+    math.min(maxIj, (leaf >> cellShift) + 1)
+
+  /** Leaf (level 30) ij bounds of the rect's projection onto each face:
+   *  slots `4f .. 4f+3` hold iMin, iMax, jMin, jMax of face f, and iMin is -1
+   *  when no rect point lands on f. Level-independent, so one call serves
+   *  every level. */
+  private def faceLeafBounds(minLat: Double, minLon: Double, maxLat: Double,
+                             maxLon: Double): Array[Int] = {
+    val out = Array.fill(24)(-1)
     var f = 0
     while (f < 6) {
       // unclamped uv bound over the augmented samples of the rect clipped to
@@ -199,24 +262,15 @@ object S2 {
       }
       // skip faces whose uv box misses the face square entirely: no rect
       // point projects onto this face (points exactly on a face boundary are
-      // caught by the >= comparisons plus the one-cell margin below)
+      // caught by the >= comparisons plus the one-cell margin)
       if (any && uMax >= -1 && uMin <= 1 && vMax >= -1 && vMin <= 1) {
-        val i0 = math.max(0, (stToIj(uvToSt(math.max(-1, uMin))) >> cellShift) - 1)
-        val i1 = math.min(maxIj, (stToIj(uvToSt(math.min(1, uMax))) >> cellShift) + 1)
-        val j0 = math.max(0, (stToIj(uvToSt(math.max(-1, vMin))) >> cellShift) - 1)
-        val j1 = math.min(maxIj, (stToIj(uvToSt(math.min(1, vMax))) >> cellShift) + 1)
-        var i = i0
-        while (i <= i1) {
-          var j = j0
-          while (j <= j1) {
-            set += parent(fromFaceIj(f, i << cellShift, j << cellShift), lvl)
-            j += 1
-          }
-          i += 1
-        }
+        out(4 * f) = stToIj(uvToSt(math.max(-1, uMin)))
+        out(4 * f + 1) = stToIj(uvToSt(math.min(1, uMax)))
+        out(4 * f + 2) = stToIj(uvToSt(math.max(-1, vMin)))
+        out(4 * f + 3) = stToIj(uvToSt(math.min(1, vMax)))
       }
       f += 1
     }
-    set.toArray
+    out
   }
 }

@@ -56,4 +56,24 @@ class AutoBroadcastCountSpec extends SparkSpec {
       s"expected fewer jobs with rightRows supplied " +
         s"(counted=$withCount, supplied=$withRows)")
   }
+
+  test("planning joinAutoBroadcast(AutoLevel) is one sample job, plus count() " +
+    "only without rightRows") {
+    val right = boxes
+    val n = right.count()
+    val left = right.limit(10)
+    val supplied = jobsFor("acb-auto-supplied") {
+      SpatialJoin.joinAutoBroadcast(left, right, cellLevel = SpatialJoin.AutoLevel,
+        rightRows = Some(n))
+    }
+    val counted = jobsFor("acb-auto-counted") {
+      SpatialJoin.joinAutoBroadcast(left, right, cellLevel = SpatialJoin.AutoLevel)
+    }
+    // count() is itself two jobs under adaptive execution (its aggregate's
+    // exchange runs as a separate map-stage job), so measure it, not assume it
+    val countJobs = jobsFor("acb-count-only")(right.count())
+    assert(supplied == 1, s"planning with rightRows ran $supplied jobs")
+    assert(counted == 1 + countJobs,
+      s"planning without rightRows ran $counted jobs, count() alone $countJobs")
+  }
 }

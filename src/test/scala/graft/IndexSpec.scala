@@ -138,6 +138,47 @@ class IndexSpec extends AnyFunSuite {
     assert(small.length < 120, s"small covering too big: ${small.length}")
   }
 
+  test("s2: coverCount equals coverRect's length, random rects and edge cases") {
+    val rnd = new scala.util.Random(20261017L)
+    val random = (0 until 60).map { _ =>
+      val la0 = rnd.nextDouble() * 170 - 85
+      val lo0 = rnd.nextDouble() * 350 - 175
+      val la1 = math.min(90.0, la0 + rnd.nextDouble() * rnd.nextDouble() * 10)
+      val lo1 = math.min(180.0, lo0 + rnd.nextDouble() * rnd.nextDouble() * 15)
+      (la0, lo0, la1, lo1)
+    }
+    // small enough that level 12 stays a few hundred thousand cells
+    val edges = Seq(
+      // next to the antimeridian: face 3's two lon windows
+      (-3.0, 177.0, 3.0, 180.0), (-3.0, -180.0, 3.0, -177.0),
+      (40.0, 176.0, 47.0, 180.0), (-47.0, -180.0, -40.0, -176.0),
+      // both polar caps, whole and off-pole
+      (86.0, -180.0, 90.0, 180.0), (-90.0, -180.0, -86.0, 180.0),
+      (33.0, 10.0, 37.0, 14.0), (-37.0, -14.0, -33.0, -10.0),
+      // edges on +-45 deg lon and +-45 deg lat
+      (-3.0, 42.0, 3.0, 45.0), (-3.0, 45.0, 3.0, 48.0), (-3.0, -48.0, 3.0, -45.0),
+      (-2.0, -46.0, 2.0, -44.0), (42.0, 0.0, 45.0, 3.0), (45.0, 0.0, 48.0, 3.0),
+      (-48.0, 44.0, -44.0, 46.0),
+      // degenerate point, and a line
+      (12.5, 7.25, 12.5, 7.25), (0.0, 0.0, 0.0, 0.0), (45.0, 45.0, 45.0, 45.0),
+      (10.0, 10.0, 10.0, 11.0),
+      // NaN bounds (an empty polygon's st_bounds), one NaN, inverted (empty)
+      (Double.NaN, Double.NaN, Double.NaN, Double.NaN), (Double.NaN, 0.0, 1.0, 1.0),
+      (5.0, 5.0, 4.0, 6.0))
+    for ((la0, lo0, la1, lo1) <- random ++ edges) {
+      val counts = S2.coverCounts(la0, lo0, la1, lo1, 12)
+      assert(counts.length == 13)
+      (0 to 12).foreach { lvl =>
+        val cells = S2.coverRect(la0, lo0, la1, lo1, lvl)
+        val n = S2.coverCount(la0, lo0, la1, lo1, lvl)
+        assert(n == cells.length, s"lvl=$lvl rect=($la0,$lo0,$la1,$lo1)")
+        assert(counts(lvl) == n, s"lvl=$lvl rect=($la0,$lo0,$la1,$lo1)")
+      }
+    }
+    assert(S2.coverCount(Double.NaN, Double.NaN, Double.NaN, Double.NaN, 5) == 0)
+    assert(S2.coverCount(5.0, 5.0, 4.0, 6.0, 5) == 0)
+  }
+
   test("s2: all six faces reachable") {
     val faces = Seq((0.0, 0.0), (0.0, 90.0), (89.0, 0.0), (0.0, 180.0), (0.0, -90.0),
       (-89.0, 0.0)).map { case (la, lo) => S2.face(S2.leafCell(la, lo)) }.toSet

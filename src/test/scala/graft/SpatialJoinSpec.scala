@@ -269,17 +269,17 @@ class SpatialJoinSpec extends SparkSpec {
     assert(est > 0 && est < (10L << 20), s"estimate $est out of range")
   }
 
+  // continent-sized boxes (~60 deg): covering at level 9 would be huge
+  private lazy val big: DataFrame = spark.createDataFrame((0 until 20).map(i =>
+    (i.toLong, polyWkb((-150.0 + i, -30.0), (-90.0 + i, -30.0),
+      (-90.0 + i, 30.0), (-150.0 + i, 30.0))))).toDF("id", "geometry")
+  // city-block boxes (~0.02 deg)
+  private lazy val small: DataFrame = spark.createDataFrame((0 until 20).map(i =>
+    (i.toLong, polyWkb((i * 1.0, 0.0), (i + 0.02, 0.0),
+      (i + 0.02, 0.02), (i * 1.0, 0.02))))).toDF("id", "geometry")
+
   test("autoCellLevel: measured fan-out picks coarse levels for big polygons, " +
     "fine for small; join rows are level-invariant") {
-    import spark.implicits._
-    // continent-sized boxes (~60 deg): covering at level 9 would be huge
-    val big = (0 until 20).map(i =>
-      (i.toLong, polyWkb((-150.0 + i, -30.0), (-90.0 + i, -30.0),
-        (-90.0 + i, 30.0), (-150.0 + i, 30.0)))).toDF("id", "geometry")
-    // city-block boxes (~0.02 deg)
-    val small = (0 until 20).map(i =>
-      (i.toLong, polyWkb((i * 1.0, 0.0), (i + 0.02, 0.0),
-        (i + 0.02, 0.02), (i * 1.0, 0.02)))).toDF("id", "geometry")
     val lBig = SpatialJoin.autoCellLevel(big)
     val lSmall = SpatialJoin.autoCellLevel(small)
     assert(lBig < lSmall, s"big=$lBig small=$lSmall")
@@ -290,6 +290,107 @@ class SpatialJoinSpec extends SparkSpec {
       SpatialPredicate.Intersects, cellLevel = SpatialJoin.AutoLevel)
     assert(viaAuto.select("point_values_left").collect()
       .map(_.getDouble(0)).sorted.toSeq == Seq(2.0, 3.0))
+  }
+
+  /** 32-vertex star polygons about 0.8 deg across, one per 1.25 deg grid
+   *  cell, centres and radii jittered by a seeded generator. */
+  private def stars(nx: Int, ny: Int, seed: Long): Seq[(Long, Array[Byte])] = {
+    val rnd = new scala.util.Random(seed)
+    for (i <- 0 until nx; j <- 0 until ny) yield {
+      val cx = -40 + (i + 0.5) * 1.25 + (rnd.nextDouble() - 0.5) * 0.4
+      val cy = -20 + (j + 0.5) * 1.25 + (rnd.nextDouble() - 0.5) * 0.4
+      val r = 0.5 * (0.7 + 0.3 * rnd.nextDouble())
+      val ring = (0 until 32).map { k =>
+        val ang = 2 * math.Pi * (k + 0.5 * (rnd.nextDouble() - 0.5)) / 32
+        val rk = r * (0.55 + 0.45 * rnd.nextDouble())
+        (cx + rk * math.cos(ang), cy + rk * math.sin(ang))
+      }
+      ((i * ny + j).toLong, polyWkb(ring: _*))
+    }
+  }
+
+  test("autoCellLevel / estimateCoveringBytes equal the per-level covering-size " +
+    "formulation; joinAutoBroadcast rows equal brute force") {
+    import org.apache.spark.sql.functions._
+    // the formulation the counting replaced: build every level's covering
+    // and average its size, then the same pick and the same product
+    def oracleLevel(right: DataFrame, targetFanOut: Double = 16.0, maxLevel: Int = 12,
+                    sampleRows: Int = 2048): Int = {
+      val row = right.select(col("geometry")).limit(sampleRows)
+        .select((0 to maxLevel).map(l =>
+          avg(size(SpatialJoin.cellsFor(col("geometry"), l)))): _*).head()
+      (maxLevel to 0 by -1)
+        .find(l => !row.isNullAt(l) && row.getDouble(l) <= targetFanOut).getOrElse(0)
+    }
+    def oracleBytes(right: DataFrame, level: Int, sampleRows: Int = 2048): Long = {
+      val n = right.count()
+      if (n == 0) return 0L
+      val otherBytes = right.schema.fields
+        .filterNot(_.name == "geometry").map(_.dataType.defaultSize.toLong).sum + 16
+      val row = right.select(col("geometry")).limit(sampleRows)
+        .select(avg(length(col("geometry"))),
+          avg(size(SpatialJoin.cellsFor(col("geometry"), level)))).head()
+      val g = if (row.isNullAt(0)) 64.0 else row.getDouble(0)
+      val f = if (row.isNullAt(1)) 1.0 else math.max(1.0, row.getDouble(1))
+      (n * f * (g + otherBytes)).toLong
+    }
+    val starLayer = spark.createDataFrame(stars(16, 16, 5L)).toDF("id", "geometry")
+    // (name, layer, finest level the oracle builds): `big` at level 12 would
+    // build ~7M cells per row, so its oracle stops at level 8
+    val layers = Seq(("big", big, 8), ("small", small, 12), ("stars", starLayer, 12),
+      ("points", points, 12), ("polys", polys, 12), ("empty", starLayer.limit(0), 12))
+    for ((name, layer, cap) <- layers) {
+      for ((fan, maxL, rows) <- Seq((16.0, cap, 2048), (4.0, cap - 3, 2048), (40.0, cap, 7))) {
+        assert(SpatialJoin.autoCellLevel(layer, fan, maxL, rows) ==
+          oracleLevel(layer, fan, maxL, rows), s"$name fan=$fan maxLevel=$maxL rows=$rows")
+      }
+      val levels = Seq(0, 3, 6, 9, 12, oracleLevel(layer, maxLevel = cap)).filter(_ <= cap)
+      for (level <- levels; rows <- Seq(2048, 5)) {
+        assert(SpatialJoin.estimateCoveringBytes(layer, level, rows) ==
+          oracleBytes(layer, level, rows), s"$name level=$level rows=$rows")
+      }
+    }
+
+    // boxes 0.2-1 deg across over the stars' extent, joined at the picked level
+    val rnd = new scala.util.Random(9L)
+    val boxes = (0 until 200).map { k =>
+      val x = -40 + rnd.nextDouble() * 19; val y = -20 + rnd.nextDouble() * 19
+      val w = 0.2 + rnd.nextDouble() * 0.8; val h = 0.2 + rnd.nextDouble() * 0.8
+      (k.toLong, polyWkb((x, y), (x + w, y), (x + w, y + h), (x, y + h)))
+    }
+    val boxDf = spark.createDataFrame(boxes).toDF("bid", "geometry")
+    val oracle = (for {
+      (bid, bw) <- boxes
+      (sid, sw) <- stars(16, 16, 5L)
+      if GeomKernel.joinRefine(bw, sw, GeomKernel.PRED_INTERSECTS)
+    } yield (bid, sid)).toSet
+    assert(oracle.nonEmpty)
+    for (rightRows <- Seq(None, Some(256L))) {
+      val got = SpatialJoin.joinAutoBroadcast(boxDf, starLayer, SpatialPredicate.Intersects,
+        cellLevel = SpatialJoin.AutoLevel, rightRows = rightRows)
+        .select("bid_left", "id_right").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(got.length == got.toSet.size && got.toSet == oracle, s"rightRows=$rightRows")
+    }
+  }
+
+  test("decision inputs are checked by name") {
+    def msg(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    assert(msg(SpatialJoin.joinAutoBroadcast(points, polys, rightRows = Some(-5L)))
+      .contains("rightRows must be >= 0, got -5"))
+    assert(msg(SpatialJoin.estimateCoveringBytes(polys, 4, rightRows = Some(-1L)))
+      .contains("rightRows must be >= 0, got -1"))
+    assert(msg(SpatialJoin.autoCellLevel(polys, targetFanOut = 0.5))
+      .contains("targetFanOut must be >= 1, got 0.5"))
+    assert(msg(SpatialJoin.autoCellLevel(polys, maxLevel = 31))
+      .contains("maxLevel must be in 0..30, got 31"))
+    assert(msg(SpatialJoin.autoCellLevel(polys, maxLevel = -1))
+      .contains("maxLevel must be in 0..30, got -1"))
+    assert(msg(SpatialJoin.autoCellLevel(polys, sampleRows = 0))
+      .contains("sampleRows must be > 0, got 0"))
+    assert(msg(SpatialJoin.estimateCoveringBytes(polys, 31))
+      .contains("cellLevel must be in 0..30, got 31"))
+    // the largest admissible level still works
+    assert(SpatialJoin.autoCellLevel(polys, maxLevel = 30) >= 0)
   }
 
   test("joinWithin: distance join equals JTS brute force, incl. cross-cell radii") {
